@@ -46,23 +46,6 @@ object SparkEntry {
   private[graft] def scopedFixture(dir: String, name: String): String =
     s"$fixtureRoot/${name}_${sfTag(dir)}"
 
-  /** Write-once fixture stamp: a fixture directory is reusable when its
-    * `_GRAFT_STAMP` file records the exact (sfDir, source-fingerprint)
-    * string the caller derived from the CURRENT source slice. Rebuild on
-    * any mismatch — an SF switch or regenerated testdata must never be
-    * served a stale fixture — and skip the (expensive) write otherwise, so
-    * bench passes time the fixture's READ path, not its build (round-5
-    * verdict: q61's "ORC read" number was mostly write; with the stamp,
-    * pass A rebuilds at most once after an SF switch and pass B always
-    * reads only, so the min-of-two is a pure read). `_`-prefixed files are
-    * invisible to Spark's file listing and to the oracle's `*.parquet`
-    * glob alike.
-    */
-  private[graft] def fixtureReady(path: String, stamp: String): Boolean = {
-    val m = java.nio.file.Paths.get(path, "_GRAFT_STAMP")
-    java.nio.file.Files.exists(m) && java.nio.file.Files.readString(m) == stamp
-  }
-
   /** JVM-local memo of the SOURCE fingerprints the fixture stamps derive
     * from (r17). Every fixture-backed query re-derived its stamp with a
     * count + bit_xor(xxhash64(...)) aggregation over the source table —
@@ -109,38 +92,78 @@ object SparkEntry {
     digest.map(b => f"$b%02x").mkString
   }
 
-  private def memoSourceFp(key: String, file: String)(
-      compute: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {
-    val sig = fsSignature(file)
+  /** (count, bit_xor(xxhash64(cols))) of one source table of `dir`,
+    * memoized per JVM under the table file's [[fsSignature]]. */
+  private def memoSourceFp(s: SparkSession, dir: String, table: String)(
+      df: => DataFrame, cols: String*): org.apache.spark.sql.Row = {
+    val sig = fsSignature(s"$dir/$table.parquet")
+    val key = s"$table|$dir"
     val hit = sourceFpMemo.get(key)
     if (hit != null && hit._1 == sig) hit._2
     else {
-      val r = compute
+      val r = df.agg(count(lit(1)), bit_xor(xxhash64(cols.map(col): _*))).head()
       sourceFpMemo.put(key, (sig, r))
       r
     }
   }
 
-  /** The shared (count, bit_xor(xxhash64(doc_id, text))) fingerprint of the
-    * documents table — the stamp ingredient of every documents-derived
-    * fixture, memoized per JVM (see [[memoSourceFp]]).
-    */
+  /** The content fingerprint of each source table — the data half of every
+    * fixture stamp derived from it. */
   private[graft] def documentsFp(s: SparkSession, dir: String): org.apache.spark.sql.Row =
-    memoSourceFp(s"docs|$dir", s"$dir/documents.parquet") {
-      Tables.documents(s, dir).agg(
-        count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    }
+    memoSourceFp(s, dir, "documents")(Tables.documents(s, dir), "doc_id", "text")
 
-  /** [[documentsFp]]'s analogue for the embeddings table. */
   private[graft] def embeddingsFp(s: SparkSession, dir: String): org.apache.spark.sql.Row =
-    memoSourceFp(s"emb|$dir", s"$dir/embeddings.parquet") {
-      Tables.embeddings(s, dir).agg(
-        count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    }
+    memoSourceFp(s, dir, "embeddings")(Tables.embeddings(s, dir), "vec_id", "embedding")
 
-  private[graft] def stampFixture(path: String, stamp: String): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_GRAFT_STAMP"), stamp)
+  private[graft] def eventsFp(s: SparkSession, dir: String): org.apache.spark.sql.Row =
+    memoSourceFp(s, dir, "events")(Tables.events(s, dir),
+      "event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** `dir|count|xor|tail`: the stamp of a fixture derived from the source
+    * table fingerprinted as `fp`, with `tail` naming the code-resident
+    * identity (slice definition, hyperparameters, scheme versions) that no
+    * data fingerprint can see. */
+  private def sourceStamp(dir: String, fp: org.apache.spark.sql.Row, tail: String): String =
+    s"$dir|${fp.get(0)}|${fp.get(1)}|$tail"
+
+  private def docsStamp(s: SparkSession, dir: String, tail: String): String =
+    sourceStamp(dir, documentsFp(s, dir), tail)
+
+  /** The write-once fixture protocol, and the only code that reads or
+    * writes a `_GRAFT_STAMP` file. A fixture directory is reusable when its
+    * stamp records exactly `stamp`, the string the caller derived from the
+    * CURRENT source slice and code identity: then nothing else runs, so
+    * bench passes time the fixture's READ path, not its build (q61's "ORC
+    * read" number was once mostly write). On any mismatch — an SF switch,
+    * regenerated testdata, a version bump, a build that died before
+    * stamping — the whole directory is deleted and `build` writes it
+    * afresh: no file of an older build (a manifest high-water mark that
+    * would gate the rebuild's batches out as "already applied", a
+    * generation, an individually written container) can leak into the new
+    * one. The stamp is written last, so a failed build leaves none and the
+    * next call rebuilds. `_`-prefixed files are invisible to Spark's file
+    * listing and to the oracle's `*.parquet` glob alike. Returns `fixture`.
+    */
+  private[graft] def stamped(s: SparkSession, fixture: String, stamp: String)(
+      build: => Unit): String = {
+    val root = new org.apache.hadoop.fs.Path(fixture)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val stampFile = new org.apache.hadoop.fs.Path(root, "_GRAFT_STAMP")
+    val onDisk =
+      try {
+        val in = fs.open(stampFile)
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => null }
+    if (onDisk != stamp) {
+      fs.delete(root, true)
+      build
+      val out = fs.create(stampFile, true)
+      try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    fixture
+  }
 
   /** IVF model hyperparameters for the persisted-index queries (q67, q70).
     * Constants here, not inline at call sites: they are part of the index
@@ -151,8 +174,9 @@ object SparkEntry {
   private[graft] val IvfCells = 16
   private[graft] val IvfIters = 2
 
-  /** Stamp for a persisted IVF index fixture. Three ingredient classes,
-    * each covering a distinct staleness mode:
+  /** Stamp for a persisted IVF index fixture over the embeddings table of
+    * `dir`. Three ingredient classes, each covering a distinct staleness
+    * mode:
     *   - the source slice identity (sfDir + row count);
     *   - a CONTENT hash (bit_xor of xxhash64 over (vec_id, embedding) —
     *     order-insensitive like sum, but overflow-free under ANSI mode) —
@@ -162,35 +186,23 @@ object SparkEntry {
     *   - the model hyperparameters + quantizer scheme version, which live
     *     in code where no data fingerprint can see them.
     */
-  private[graft] def ivfIndexStamp(
-      emb: DataFrame, dir: String, k: Int, iters: Int,
-      canonicalSource: Boolean = false): String = {
-    // `canonicalSource` is the registry queries' opt-in: they always pass
-    // the FULL embeddings table of `dir`, so the memoized whole-table
-    // fingerprint ([[embeddingsFp]]) is the identical value without the
-    // per-execution aggregation. Arbitrary frames (specs fingerprint
-    // in-memory corpora under fake dirs) keep the direct computation.
-    val fp =
-      if (canonicalSource) embeddingsFp(emb.sparkSession, dir)
-      else emb.agg(
-        count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    s"$dir|${fp.get(0)}|${fp.get(1)}|k=$k|iters=$iters|quant=${graft.functions.Int8Ops.QuantizerVersion}|km=${Similarity.KmeansVersion}"
-  }
+  private[graft] def ivfIndexStamp(s: SparkSession, dir: String, k: Int, iters: Int): String =
+    sourceStamp(dir, embeddingsFp(s, dir),
+      s"k=$k|iters=$iters|quant=${graft.functions.Int8Ops.QuantizerVersion}|km=${Similarity.KmeansVersion}")
 
-  /** Train + persist the IVF index at `fixture` unless the stamp already
-    * matches the current corpus slice AND model hyperparameters (write-once
-    * semantics, same family as the q61/q65 lake fixtures). Extracted from
-    * q67 so the rebuild-on-hyperparameter-change behavior is directly
-    * spec-testable (`IvfIndexSpec` flips k and observes the rebuild).
+  /** Train + persist the IVF index over the embeddings of `dir` unless the
+    * stamp already matches the current corpus AND model hyperparameters.
+    * Extracted from q67 so the rebuild-on-hyperparameter-change behavior is
+    * directly spec-testable (`IvfIndexSpec` flips k and observes the
+    * rebuild).
     */
   private[graft] def ensureIvfIndex(
-      emb: DataFrame, dir: String, fixture: String, k: Int, iters: Int,
-      canonicalSource: Boolean = false): Unit = {
-    val stamp = ivfIndexStamp(emb, dir, k, iters, canonicalSource)
-    if (!fixtureReady(fixture, stamp)) {
+      s: SparkSession, dir: String, k: Int = IvfCells, iters: Int = IvfIters): String = {
+    val emb = Tables.embeddings(s, dir)
+    val fixture = scopedFixture(dir, "ivf_index")
+    stamped(s, fixture, ivfIndexStamp(s, dir, k, iters)) {
       Similarity.writeIvfIndex(
         emb, Similarity.kmeansCentroids(emb, k = k, iters = iters), fixture)
-      stampFixture(fixture, stamp)
     }
   }
 
@@ -200,18 +212,19 @@ object SparkEntry {
     * are stamp ingredients, so changing any of them rebuilds instead of
     * serving codes trained under the old scheme.
     */
-  private[graft] def ensureIvfPqIndex(
-      emb: DataFrame, dir: String, fixture: String,
-      canonicalSource: Boolean = false): Unit = {
-    val stamp = ivfIndexStamp(emb, dir, IvfCells, IvfIters, canonicalSource) +
-      s"|pq_m=$PqM|pq_k=$PqK|pq_iters=$PqIters|pq=${Pq.PqVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
+    val emb = Tables.embeddings(s, dir)
+    val fixture = scopedFixture(dir, "ivf_pq_index")
+    stamped(s, fixture, ivfIndexStamp(s, dir, IvfCells, IvfIters) +
+        s"|pq_m=$PqM|pq_k=$PqK|pq_iters=$PqIters|pq=${Pq.PqVersion}") {
       val cents = Similarity.kmeansCentroids(emb, k = IvfCells, iters = IvfIters)
       val model = Pq.train(emb, Pq.initCodebooks(emb, dims = 64, m = PqM, k = PqK), iters = PqIters)
       Pq.writeIvfPqIndex(emb, cents, model, fixture)
-      stampFixture(fixture, stamp)
     }
   }
+
+  private def appendedIvfIndexStamp(s: SparkSession, dir: String): String =
+    ivfIndexStamp(s, dir, IvfCells, IvfIters) + "|append-v1"
 
   /** The GROWN-index fixture q70 (append gate) and q79 (health monitor)
     * share: an index trained+built over 90% of the corpus, then the
@@ -227,15 +240,11 @@ object SparkEntry {
     val base = emb.filter(col("vec_id") % 10 =!= 7)
     val batch = emb.filter(col("vec_id") % 10 === 7)
     val fixture = scopedFixture(dir, "ivf_index_append")
-    val stamp =
-      ivfIndexStamp(emb, dir, IvfCells, IvfIters, canonicalSource = true) + "|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, appendedIvfIndexStamp(s, dir)) {
       val cents = Similarity.kmeansCentroids(base, k = IvfCells, iters = IvfIters)
       Similarity.writeIvfIndex(base, cents, fixture)
       Similarity.appendToIvfIndex(s, fixture, batch)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q69 fingerprint-index fixture: gen 0 over the
@@ -249,15 +258,11 @@ object SparkEntry {
     val history = docs.filter(col("doc_id") % 2 === 0)
     val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
     val fixture = scopedFixture(dir, "fp_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, Dedup.FingerprintIndexVersion)) {
       Dedup.writeFingerprintIndex(history, fixture)
       val accepted1 = Dedup.dedupAgainstFingerprintIndex(s, fixture, batch1)
       Dedup.appendFingerprintIndex(accepted1, fixture, generation = 1L)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q78 MinHash band-index fixture (gen 0 over
@@ -270,11 +275,10 @@ object SparkEntry {
     val history = docs.filter(col("doc_id") % 2 === 0)
     val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
     val fixture = scopedFixture(dir, "band_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.BandIndexVersion}" +
+    val stamp = docsStamp(s, dir, s"${Dedup.BandIndexVersion}" +
       s"|h=$BandIdxHashes|b=$BandIdxBands|seed=$BandIdxSeed" +
-      s"|minj=$BandIdxMinJ|cap=$BandIdxCap|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+      s"|minj=$BandIdxMinJ|cap=$BandIdxCap|append-v1")
+    stamped(s, fixture, stamp) {
       Dedup.writeBandIndex(history, fixture,
         nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
       val accepted1 = Dedup.dedupAgainstBandIndex(s, fixture, batch1,
@@ -283,9 +287,7 @@ object SparkEntry {
         maxBandCollisions = BandIdxCap)
       Dedup.appendBandIndex(accepted1.select("doc_id", "text"), fixture, generation = 1L,
         nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q82 eval-decontamination-index fixture: the
@@ -298,14 +300,10 @@ object SparkEntry {
   private[graft] def ensureEvalIndexFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "eval_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.EvalIndexVersion}|k=3|w=4|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"${Dedup.EvalIndexVersion}|k=3|w=4|append-v1")) {
       Dedup.writeEvalIndex(docs.filter(col("doc_id") % 20 === 7), fixture)
       Dedup.appendEvalIndex(docs.filter(col("doc_id") % 20 === 8), fixture, generation = 1L)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q86 span-count-index fixture: the doc_id % 5 ∈
@@ -317,9 +315,7 @@ object SparkEntry {
   private[graft] def ensureSpanIndexFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "span_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.SpanIndexVersion}|k=4|min=3|gens-2"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"${Dedup.SpanIndexVersion}|k=4|min=3|gens-2")) {
       Dedup.writeSpanCountIndex(
         docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 2),
         fixture, k = 4, minCount = 3L)
@@ -327,9 +323,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
         fixture, generation = 1L)
       Dedup.refreshHotSpanList(s, fixture)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** q79 diagnostic sidecar (round-9 verdict #1a): one JSON string that
@@ -344,11 +338,7 @@ object SparkEntry {
     */
   private[graft] def q79Diagnostics(s: SparkSession, dir: String): String = {
     val fixture = ensureAppendedIvfIndex(s, dir)
-    val stampPath = java.nio.file.Paths.get(fixture, "_GRAFT_STAMP")
-    val stamp =
-      if (java.nio.file.Files.exists(stampPath))
-        java.nio.file.Files.readString(stampPath)
-      else "<missing>"
+    val stamp = appendedIvfIndexStamp(s, dir)
     val dataFiles = {
       val it = java.nio.file.Files.walk(java.nio.file.Paths.get(fixture))
       try it.filter(p => p.toString.endsWith(".parquet")).count()
@@ -371,14 +361,6 @@ object SparkEntry {
       s""""hits":$hits,"nq":$nq,"k":$k,"recall_e4":$recallE4}"""
   }
 
-  /** Pre-build the expensive write-once index fixtures so a bench run's
-    * pass A times the probe/serve path, not a one-time index build (round-8
-    * advice: q78's first pass carried its 83.6 s fixture build). All builds
-    * are stamped, so this is a cheap fingerprint probe whenever the fixture
-    * already matches the current corpus slice. The lake fixtures (q47/q61/
-    * q65/q71/q72) are NOT pre-built: their builds are sub-5 s and their
-    * stamps amortize identically without warmup help.
-    */
   /** Merge-table size for the q97 BPE fixture — a stamp ingredient (a
     * different merge budget is a different tokenizer).
     */
@@ -397,10 +379,7 @@ object SparkEntry {
   private[graft] def ensureBpeFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bpe")
-    val fp = documentsFp(s, dir)
-    val stamp =
-      s"$dir|${fp.get(0)}|${fp.get(1)}|merges=$BpeMergeCount|bpe=${Bpe.BpeVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"merges=$BpeMergeCount|bpe=${Bpe.BpeVersion}")) {
       val dict = Bpe.learnDictionary(docs, "text")
       val merges = Bpe.trainFromDictionary(dict, numMerges = BpeMergeCount)
       val vocab = Bpe.buildVocab(dict, merges)
@@ -419,9 +398,7 @@ object SparkEntry {
       Bpe.naiveIdsTable(exoticInjected(docs), "text", "doc_id", merges,
           vocabBytes, byteFallback = true)
         .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** The q106/q113 HTML wrapper: markup injected deterministically around
@@ -465,13 +442,7 @@ object SparkEntry {
   private[graft] def ensureWarcFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "warc_lake")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|warc-v2"
-    if (!fixtureReady(fixture, stamp)) {
-      // container files are written individually (no directory-overwrite
-      // sink), so a re-stamp must clear stale containers itself
-      val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-      fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+    stamped(s, fixture, docsStamp(s, dir, "warc-v2")) {
       val d = col("doc_id")
       def rows(shard: Column) = docs.select(
         shard.as("shard"),
@@ -489,9 +460,7 @@ object SparkEntry {
       graft.sources.Warc.writeSharded(s,
         rows(pmod(d, lit(8)) - 4).filter(col("shard") >= 0),
         s"$fixture/warc", shards = 4, gzip = true)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Exotic-script suffixes for the q111 byte-fallback gate, appended to
@@ -519,13 +488,11 @@ object SparkEntry {
     val fixture = scopedFixture(dir, "quality_model")
     val dim = QualityClassifier.DefaultDim
     val stamp = s"dim=$dim|bias=0|qc=${QualityClassifier.ModelVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, stamp) {
       QualityClassifier.writeModel(s,
         QualityClassifier.Model(QualityClassifier.synthesizeWeights(dim), bias = 0L),
         s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** The declared schema of the q112 CSV lake (the [[CsvLake]] contract:
@@ -548,11 +515,7 @@ object SparkEntry {
   private[graft] def ensureCsvLake(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "csv_lake")
-    val fp = memoSourceFp(s"docs-id|$dir", s"$dir/documents.parquet") {
-      docs.agg(count(lit(1)), bit_xor(xxhash64(col("doc_id")))).head()
-    }
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|csv-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, "csv-v1")) {
       val d = col("doc_id")
       val idS = d.cast("string")
       val nameS = concat(lit("name_"), (d % 50).cast("string"))
@@ -564,9 +527,7 @@ object SparkEntry {
           .when(d % 13 === 8, concat_ws(",", idS, nameS, metricS, flagS, lit("extra")))
           .otherwise(concat_ws(",", idS, nameS, metricS, flagS))
       docs.select(line.as("value")).write.mode("overwrite").text(s"$fixture/csv")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q115 snapshot-lake fixture: the full
@@ -583,12 +544,7 @@ object SparkEntry {
   private[graft] def ensureSnapshotLake(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "snap_lake")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|snap-v1"
-    if (!fixtureReady(fixture, stamp)) {
-      // generations are file-level state — clear stale ones on re-stamp
-      val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-      fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+    stamped(s, fixture, docsStamp(s, dir, "snap-v1")) {
       val base = docs.select("doc_id", "lang", "source", "n_chars")
       val root = s"$fixture/tbl"
       graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 2 === 0), root)
@@ -596,9 +552,7 @@ object SparkEntry {
       graft.sinks.SnapshotLake.compact(s, root, targetRecordsPerFile = 1000000L)
       graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 8 === 3), root)
       graft.sinks.SnapshotLake.vacuum(s, root, keepGenerations = 3)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Marker suffixes of the q109 labeled training corpus: every even doc
@@ -627,21 +581,21 @@ object SparkEntry {
   private[graft] def ensureTrainedQualityModel(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "quality_model_trained")
-    val fp = documentsFp(s, dir)
     // the class markers are trainer inputs: editing either would leave a
     // stale fixture serving old weights while the oracle re-derives with
     // the new markers (round-13 advice) — fold them into the identity
     val markers = Integer.toHexString((QcGoodMark + " " + QcBadMark).hashCode)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dim=${QualityClassifier.DefaultDim}" +
+    val stamp = docsStamp(s, dir, s"dim=${QualityClassifier.DefaultDim}" +
       s"|scale=${QualityClassifier.TrainScale}|qc=${QualityClassifier.ModelVersion}" +
-      s"|marks=$markers|centroid-v1"
-    if (!fixtureReady(fixture, stamp)) {
+      s"|marks=$markers|centroid-v1")
+    stamped(s, fixture, stamp) {
       val model = QualityClassifier.trainCentroid(qcLabeled(docs), "__ltext", "__lbl")
       QualityClassifier.writeModel(s, model, s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
+
+  private def bm25IndexStamp(s: SparkSession, dir: String): String =
+    docsStamp(s, dir, s"bm=${Bm25.Version}")
 
   /** Stamped build of the q119 BM25 inverted index over the documents
     * corpus ([[Bm25.buildIndex]]). A pure function of (corpus slice,
@@ -651,11 +605,8 @@ object SparkEntry {
   private[graft] def ensureBm25Index(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bm25")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, bm25IndexStamp(s, dir)) {
       Bm25.buildIndex(docs, "text", "doc_id", s"$fixture/idx")
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
@@ -669,33 +620,27 @@ object SparkEntry {
   private[graft] def ensureBm25EvalIndex(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bm25_eval")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}|g=2|eval78"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"bm=${Bm25.Version}|g=2|eval78")) {
       Bm25.buildIndex(
         docs.filter(col("doc_id") % 20 === 7 || col("doc_id") % 20 === 8),
         "text", "doc_id", s"$fixture/idx", ngram = 2)
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
 
   /** Catalog-registered TERM-BUCKETED copy of the q119 index's postings
     * ([[Bucketing.ensureBm25Postings]]) for the q123 bucket-pruned serve.
-    * The layout identity is the index fixture's WRITTEN stamp verbatim
-    * (read back from `_GRAFT_STAMP`, hashed into the catalog name) — one
-    * source of truth, so anything that rebuilds the index (corpus change,
+    * The layout identity is the index fixture's stamp verbatim
+    * ([[bm25IndexStamp]], hashed into the catalog name) — one source of
+    * truth, so anything that rebuilds the index (corpus change,
     * `Bm25.Version` bump) lands a fresh layout instead of a stale catalog
-    * hit, and no second full-corpus fingerprint scan runs per serve
-    * (review finding: the identity recomputed the aggregate the stamp
-    * already recorded, and omitted the scheme version).
+    * hit, and the stamp's memoized fingerprint means no second
+    * full-corpus scan runs per serve.
     */
   private[graft] def ensureBm25BucketedPostings(s: SparkSession, dir: String): String = {
     val idx = ensureBm25Index(s, dir)
-    val stamp = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(scopedFixture(dir, "bm25"), "_GRAFT_STAMP"))
     val identity =
-      s"${sfTag(dir)}_${java.lang.Integer.toHexString(stamp.hashCode)}"
+      s"${sfTag(dir)}_${java.lang.Integer.toHexString(bm25IndexStamp(s, dir).hashCode)}"
     Bucketing.ensureBm25Postings(
       s, s"$idx/postings", s"$fixtureRoot/bucketed", identity)
   }
@@ -710,15 +655,12 @@ object SparkEntry {
   private[graft] def ensureBm25IncIndex(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bm25_inc")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}|inc"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"bm=${Bm25.Version}|inc")) {
       Bm25.installIndex(docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
         s"$fixture/idx")
       Bm25.appendDocs(docs.filter(col("doc_id") % 2 === 1), s"$fixture/idx",
         generation = 1L)
       Bm25.refreshIndex(s, s"$fixture/idx")
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
@@ -733,9 +675,7 @@ object SparkEntry {
   private[graft] def ensureUnigramFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "unigram")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|uni=${graft.functions.Unigram.Version}|b"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"uni=${graft.functions.Unigram.Version}|b")) {
       val dict = graft.functions.Unigram.learnDictionary(docs, "text")
       val model = graft.functions.Unigram.trainFromDictionary(dict)
       graft.functions.Unigram.writeModel(s, model, s"$fixture/model")
@@ -752,30 +692,9 @@ object SparkEntry {
       graft.functions.Unigram
         .naiveIdTable(exoticInjected(docs), "text", "doc_id", byteModel)
         .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
-  /** Generated DuckDB oracle for the BM25 retrieval gates (q119/q122):
-    * tokenization, tf, dl, the exact-integer length norm, pseudo-query
-    * selection and the rational tf-normalization all re-derived from the
-    * base table; only idf_e6 joins from `termsPath` — the one persisted
-    * transcendental (q101 shared-artifact discipline). Two gates, one
-    * SQL: the q122 variant only swaps in the incremental artifact's
-    * terms table, which is exactly the claim under test.
-    */
-  /** Generated DuckDB derivation shared by the q124 decontamination and
-    * q127 calibration oracles: the full shingle-BM25 sweep — bigram
-    * terms from the eval slices, bag-of-shingles query scoring over the
-    * caller-supplied CLEAN population (`cleanSql`, always unioned with
-    * the q124 light-edit injection), the exact-integer length norm and
-    * the per-shingle normalization — through the `normed` CTE
-    * (doc_id, eval_id, score_e6, norm_e6). Only idf_e6 joins from the
-    * persisted eval-index artifact (the q119 discipline). One source of
-    * truth: the two consumers append different tails but can never
-    * disagree on the arithmetic.
-    */
   /** Stamped build of the q131 DSIR fixture: train the importance-weight
     * model (target = the %10==3 corpus slice, raw = the rest —
     * "make the raw corpus look like the target domain") and persist it
@@ -788,9 +707,7 @@ object SparkEntry {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "dsir")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dsir=1"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, "dsir=1")) {
       val target = docs.filter(col("doc_id") % 10 === 3)
       val raw = docs.filter(col("doc_id") % 10 =!= 3)
       val model = graft.functions.Dsir.trainImportance(target, raw, "text")
@@ -798,9 +715,7 @@ object SparkEntry {
       graft.functions.Dsir.gumbelTableE4().zipWithIndex
         .map { case (g, i) => (i.toLong, g) }.toSeq.toDF("i", "g_e4")
         .coalesce(1).write.mode("overwrite").parquet(s"$fixture/gumbel")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** q131 selection size and noise salt — shared between the query and
@@ -898,6 +813,17 @@ object SparkEntry {
        |ORDER BY b.doc_id""".stripMargin
   }
 
+  /** Generated DuckDB derivation shared by the q124 decontamination and
+    * q127 calibration oracles: the full shingle-BM25 sweep — bigram
+    * terms from the eval slices, bag-of-shingles query scoring over the
+    * caller-supplied CLEAN population (`cleanSql`, always unioned with
+    * the q124 light-edit injection), the exact-integer length norm and
+    * the per-shingle normalization — through the `normed` CTE
+    * (doc_id, eval_id, score_e6, norm_e6). Only idf_e6 joins from the
+    * persisted eval-index artifact (the q119 discipline). One source of
+    * truth: the two consumers append different tails but can never
+    * disagree on the arithmetic.
+    */
   private def shingleBm25NormedSql(dir: String, cleanSql: String): String =
     s"""WITH evals AS (
        |  SELECT doc_id, text FROM documents WHERE doc_id % 20 IN (7, 8)),
@@ -943,6 +869,14 @@ object SparkEntry {
        |    CAST(${ExactAgg.Sql.divHalfUp("score_e6", "n_sh")} AS BIGINT) AS norm_e6
        |  FROM top1)""".stripMargin
 
+  /** Generated DuckDB oracle for the BM25 retrieval gates (q119/q122):
+    * tokenization, tf, dl, the exact-integer length norm, pseudo-query
+    * selection and the rational tf-normalization all re-derived from the
+    * base table; only idf_e6 joins from `termsPath` — the one persisted
+    * transcendental (q101 shared-artifact discipline). Two gates, one
+    * SQL: the q122 variant only swaps in the incremental artifact's
+    * terms table, which is exactly the claim under test.
+    */
   private def bm25RetrievalOracleSql(termsPath: String): String =
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
@@ -1014,19 +948,16 @@ object SparkEntry {
   private[graft] def ensureLangIdModel(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "langid_model")
-    val fp = documentsFp(s, dir)
     val markers = Integer.toHexString(
       LangIdMarks.map { case (c, m) => s"$c=$m" }.mkString("|").hashCode)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dim=${QualityClassifier.DefaultDim}" +
+    val stamp = docsStamp(s, dir, s"dim=${QualityClassifier.DefaultDim}" +
       s"|scale=${QualityClassifier.TrainScale}|qc=${QualityClassifier.ModelVersion}" +
-      s"|marks=$markers|centroid-multi-v1"
-    if (!fixtureReady(fixture, stamp)) {
+      s"|marks=$markers|centroid-multi-v1")
+    stamped(s, fixture, stamp) {
       val models = QualityClassifier.trainCentroidMulti(
         langIdLabeled(docs), "__ltext", "__cls")
       QualityClassifier.writeMultiModel(s, models, s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped train of the q101 bigram-LM fixture ([[LangModel.train]]) —
@@ -1036,13 +967,9 @@ object SparkEntry {
   private[graft] def ensureLmFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bigram_lm")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"lm=${LangModel.LmVersion}")) {
       LangModel.train(docs, "text", s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q108 INCREMENTAL LM fixture: generation 0
@@ -1054,17 +981,13 @@ object SparkEntry {
   private[graft] def ensureLmIncFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "bigram_lm_inc")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}|incr-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"lm=${LangModel.LmVersion}|incr-v1")) {
       LangModel.installCountIndex(
         docs.filter(col("doc_id") % 2 === 0), "text", s"$fixture/inc")
       LangModel.appendCounts(
         docs.filter(col("doc_id") % 4 === 1), s"$fixture/inc", generation = 1L)
       LangModel.refreshModel(s, s"$fixture/inc")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped train of the q110 TRIGRAM fixture — the same artifact family
@@ -1075,15 +998,19 @@ object SparkEntry {
   private[graft] def ensureLm3Fixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
     val fixture = scopedFixture(dir, "trigram_lm")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}|n=3"
-    if (!fixtureReady(fixture, stamp)) {
+    stamped(s, fixture, docsStamp(s, dir, s"lm=${LangModel.LmVersion}|n=3")) {
       LangModel.train(docs, "text", s"$fixture/model", order = 3)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
+  /** Pre-build the expensive write-once index fixtures so a bench run's
+    * pass A times the probe/serve path, not a one-time index build (q78's
+    * first pass once carried its 83.6 s fixture build). All builds
+    * are stamped, so this is a cheap fingerprint probe whenever the fixture
+    * already matches the current corpus slice. The lake fixtures (q47/q61/
+    * q65/q71/q72) are NOT pre-built: their builds are sub-5 s and their
+    * stamps amortize identically without warmup help.
+    */
   private[graft] def prebuildFixtures(s: SparkSession, dir: String): Unit = {
     ensureFpIndexFixture(s, dir)
     ensureBpeFixture(s, dir)
@@ -1094,12 +1021,9 @@ object SparkEntry {
     ensureLm3Fixture(s, dir)
     ensureBandIndexFixture(s, dir)
     ensureEvalIndexFixture(s, dir)
-    ensureIvfIndex(Tables.embeddings(s, dir), dir,
-      scopedFixture(dir, "ivf_index"), k = IvfCells, iters = IvfIters,
-      canonicalSource = true)
+    ensureIvfIndex(s, dir)
     ensureAppendedIvfIndex(s, dir)
-    ensureIvfPqIndex(Tables.embeddings(s, dir), dir, scopedFixture(dir, "ivf_pq_index"),
-      canonicalSource = true)
+    ensureIvfPqIndex(s, dir)
     Bucketing.ensureCustomerOrders(s, dir, s"$fixtureRoot/bucketed")
     ensureBm25BucketedPostings(s, dir)
     ensureBm25EvalIndex(s, dir)
@@ -1448,9 +1372,7 @@ object SparkEntry {
     // run; a production corpus pays it once and serves from here ----
     "q67_ivf_index_serve" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val fixture = scopedFixture(dir, "ivf_index")
-      ensureIvfIndex(emb, dir, fixture, k = IvfCells, iters = IvfIters,
-        canonicalSource = true)
+      val fixture = ensureIvfIndex(s, dir)
       Similarity.queryIvfIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = 5)
         .groupBy("query_id")
         .agg(
@@ -1566,22 +1488,12 @@ object SparkEntry {
       val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))) // b1 content replayed
       val fixture = scopedFixture(dir, "ingest_root")
-      val fp = documentsFp(s, dir)
-      val stamp =
-        s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}|ingest-v1"
-      if (!fixtureReady(fixture, stamp)) {
-        // the root carries the manifest high-water mark, so a stale fixture
-        // must be wiped, not overwritten — a leftover manifest would gate
-        // the rebuild's batches out as "already applied"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(fixture), s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+      stamped(s, fixture, docsStamp(s, dir, s"${Dedup.FingerprintIndexVersion}|ingest-v1")) {
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L) // committed replay: must no-op
         IngestPipeline.ingestBatch(s, paths, b2, 2L)
-        stampFixture(fixture, stamp)
       }
       Tables.parquetScan(s, s"$fixture/doc_lake")
         .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
@@ -1605,19 +1517,13 @@ object SparkEntry {
       val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
       val fixture = scopedFixture(dir, "ingest_root_c")
-      val fp = documentsFp(s, dir)
-      val stamp =
-        s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}|ingest-compact-v1"
-      if (!fixtureReady(fixture, stamp)) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(fixture), s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+      stamped(s, fixture,
+          docsStamp(s, dir, s"${Dedup.FingerprintIndexVersion}|ingest-compact-v1")) {
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L)
         IngestPipeline.compactCommitted(s, paths, 1L)
         IngestPipeline.ingestBatch(s, paths, b2, 2L)
-        stampFixture(fixture, stamp)
       }
       Tables.parquetScan(s, s"$fixture/doc_lake")
         .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
@@ -2120,20 +2026,16 @@ object SparkEntry {
       val src = Tables.events(s, dir)
         .filter(col("event_id") < 2000)
         .select("event_id", "user_id", "event_type", "value")
-      // source-slice fingerprint (count + sum of a key column): one cheap
-      // pushed-filter agg per attempt; write the ORC fixture only when the
-      // stamp says the on-disk copy came from different data, so the timed
-      // body is the READ path (write coverage lives in SourceFormatsSpec's
-      // S9 round-trip). The stamp also records the SLICE DEFINITION
-      // (predicate + projected columns + format) — those live in code, so
-      // a data fingerprint alone would keep serving the old layout after
-      // an edit here changed what the fixture should contain (round-6 #8)
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=event_id<2000;cols=event_id,user_id,event_type,value;fmt=orc"
-      if (!fixtureReady(fixture, stamp)) {
+      // write the ORC fixture only when the stamp says the on-disk copy
+      // came from different data, so the timed body is the READ path (write
+      // coverage lives in SourceFormatsSpec's S9 round-trip). The stamp
+      // also records the SLICE DEFINITION (predicate + projected columns +
+      // format) — those live in code, so a data fingerprint alone would
+      // keep serving the old layout after an edit here changed what the
+      // fixture should contain
+      stamped(s, fixture, sourceStamp(dir, eventsFp(s, dir),
+          "slice=event_id<2000;cols=event_id,user_id,event_type,value;fmt=orc")) {
         src.write.mode("overwrite").format("orc").save(fixture)
-        stampFixture(fixture, stamp)
       }
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
@@ -2157,12 +2059,9 @@ object SparkEntry {
         .select("event_id", "user_id", "event_type", "value", "event_date")
       // stamp = data fingerprint + the code-resident layout definition
       // (projection + partition column + format), same rationale as q61's
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=cols=event_id,user_id,event_type,value;part=event_date;fmt=parquet"
-      if (!fixtureReady(fixture, stamp)) {
+      stamped(s, fixture, sourceStamp(dir, eventsFp(s, dir),
+          "slice=cols=event_id,user_id,event_type,value;part=event_date;fmt=parquet")) {
         src.write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-        stampFixture(fixture, stamp)
       }
       sinks.Sinks.readLakePartition(s, fixture, "event_date", "2024-01-15")
         .select("event_id", "user_id", "event_type", "value")
@@ -2184,16 +2083,13 @@ object SparkEntry {
       val src = Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .select("event_id", "user_id", "event_type", "value", "event_date")
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
       // scratch-v2: pre-v2 fixtures were compacted IN PLACE by the first
       // run (the advice finding) — the marker forces one rebuild so the
       // on-disk fixture is actually 40-file fragmented again
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=cols=event_id,user_id,event_type,value;part=event_date;frag=40|scratch-v2"
-      if (!fixtureReady(fixture, stamp)) {
+      stamped(s, fixture, sourceStamp(dir, eventsFp(s, dir),
+          "slice=cols=event_id,user_id,event_type,value;part=event_date;frag=40|scratch-v2")) {
         src.repartition(40)
           .write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-        stampFixture(fixture, stamp)
       }
       // The timed body compacts a SCRATCH copy of the fragmented partition,
       // re-made every run (round-7 advice: compacting the stamped fixture
@@ -2203,8 +2099,8 @@ object SparkEntry {
       // pathology the stamp claims, so both bench passes and later
       // sessions all pay the real small-file work.
       val scratch = scopedFixture(dir, "frag_lake_scratch")
-      val fsys = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(scratch), s.sparkContext.hadoopConfiguration)
+      val fsys = new org.apache.hadoop.fs.Path(scratch)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       fsys.delete(new org.apache.hadoop.fs.Path(scratch), true)
       org.apache.hadoop.fs.FileUtil.copy(
         fsys, new org.apache.hadoop.fs.Path(s"$fixture/event_date=2024-01-16"),
@@ -2229,10 +2125,8 @@ object SparkEntry {
     "q72_schema_evolution" -> { (s, dir) =>
       val fixture = scopedFixture(dir, "evolved_lake")
       val ev = Tables.events(s, dir)
-      val fp = ev.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=v1:eid%3=0(min_salary:str);v2:eid%3=1(salary_min:dbl,source)"
-      if (!fixtureReady(fixture, stamp)) {
+      stamped(s, fixture, sourceStamp(dir, eventsFp(s, dir),
+          "slice=v1:eid%3=0(min_salary:str);v2:eid%3=1(salary_min:dbl,source)")) {
         ev.filter(col("event_id") % 3 === 0)
           .select(col("event_id").as("job_id"),
             col("value").cast("string").as("min_salary"),
@@ -2244,7 +2138,6 @@ object SparkEntry {
             col("event_type").as("location"),
             lit("v2").as("source"))
           .write.mode("overwrite").parquet(s"$fixture/gen=2")
-        stampFixture(fixture, stamp)
       }
       val merged = sources.SchemaEvolution.readMergedLake(s, fixture)
       sources.SchemaEvolution
@@ -2794,8 +2687,7 @@ object SparkEntry {
     "q92_ivf_pq_index_serve" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val k = 5
-      val fixture = scopedFixture(dir, "ivf_pq_index")
-      ensureIvfPqIndex(emb, dir, fixture, canonicalSource = true)
+      val fixture = ensureIvfPqIndex(s, dir)
       Pq.queryIvfPqIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = k)
         .groupBy("query_id")
         .agg(
@@ -2820,8 +2712,7 @@ object SparkEntry {
     "q93_ivf_pq_health" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val k = 10
-      val fixture = scopedFixture(dir, "ivf_pq_index")
-      ensureIvfPqIndex(emb, dir, fixture, canonicalSource = true)
+      val fixture = ensureIvfPqIndex(s, dir)
       Pq.ivfPqIndexRecall(s, fixture, emb.filter(col("vec_id") < 10), nProbe = 4, k = k)
         .agg(
           count(lit(1)).as("n_queries"),
@@ -2996,9 +2887,7 @@ object SparkEntry {
     // oracle reads the SAME lists parquet and re-derives the exact carve
     // (full value oracle, q96 family) ----
     "q100_semantic_carve" -> { (s, dir) =>
-      val fixture = scopedFixture(dir, "ivf_index")
-      ensureIvfIndex(Tables.embeddings(s, dir), dir, fixture,
-        k = IvfCells, iters = IvfIters, canonicalSource = true)
+      val fixture = ensureIvfIndex(s, dir)
       Sampling.semanticCarve(s, fixture, n = 10, salt = "semcarve-v1")
         .orderBy("cell_id", "vec_id")
     },

@@ -323,10 +323,19 @@ object IngestPipeline {
       maxSkewRatio: Int = 10,
       minRecallPct: Int = 60,
       retrainIters: Int = 5,
-      retrainK: Option[Int] = None)
+      retrainK: Option[Int] = None) extends HealthThresholds
 
-  /** One health-check outcome: the pre-repair telemetry plus whether the
-    * monitor tripped and the migration ran. */
+  /** The thresholds both index-health monitors gate on. */
+  sealed trait HealthThresholds {
+    def k: Int
+    def sampleQueries: Int
+    def maxSkewRatio: Int
+    def minRecallPct: Int
+  }
+
+  /** One health-check outcome of either monitor (IVF or IVF-PQ): the
+    * pre-repair telemetry plus whether the monitor tripped and the
+    * migration ran. */
   final case class IvfHealthReport(
       nCells: Long,
       nVecs: Long,
@@ -375,12 +384,36 @@ object IngestPipeline {
   def checkIvfHealth(
       spark: SparkSession,
       paths: IngestPaths,
-      cfg: IvfHealthConfig): Option[IvfHealthReport] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.ivfIndex), spark.sparkContext.hadoopConfiguration)
+      cfg: IvfHealthConfig): Option[IvfHealthReport] =
+    checkIndexHealth(spark, paths, paths.ivfIndex, "IVF", cfg,
+      Similarity.ivfIndexReadable(spark, paths.ivfIndex),
+      probe => Similarity.ivfIndexRecall(spark, paths.ivfIndex, probe, cfg.nProbe, cfg.k),
+      // the model's true cell count comes from the CELLS table, not from the
+      // non-empty lists partitions: emptied cells would otherwise silently
+      // shrink k on every migration
+      corpus => Similarity.migrateIvfIndex(spark, paths.ivfIndex, corpus,
+        cfg.retrainK.getOrElse(Similarity.readIvfCentroids(spark, paths.ivfIndex).length),
+        cfg.retrainIters))
+
+  /** The one body of both drift monitors: the index at `index` (`label`
+    * names it in the log) is checked with `readable`, sampled with
+    * `recall` and, when tripped and covered by the lake, repaired with
+    * `migrate`.
+    */
+  private def checkIndexHealth(
+      spark: SparkSession,
+      paths: IngestPaths,
+      index: String,
+      label: String,
+      cfg: HealthThresholds,
+      readable: => Boolean,
+      recall: DataFrame => DataFrame,
+      migrate: DataFrame => Unit): Option[IvfHealthReport] = {
+    val fs = new org.apache.hadoop.fs.Path(paths.embLake)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // readable-index detection, not bare fs.exists — a build that crashed
     // mid-cells-write must read as "no index", like the dedup indexes
-    val hasIndex = Similarity.ivfIndexReadable(spark, paths.ivfIndex)
+    val hasIndex = readable
     // same argument for the lake: an all-rejected embedding batch's
     // appendVersioned creates the root with NO data files, and a bare
     // fs.exists would send the recall gate onto a schema-less read that
@@ -402,7 +435,7 @@ object IngestPipeline {
 
     // skew: ids-only distinct (the at-least-once append absorber) then an
     // exact int64 aggregate — cheap relative to any serve
-    val sizes = spark.read.parquet(s"${paths.ivfIndex}/lists")
+    val sizes = spark.read.parquet(s"$index/lists")
       .select(col("cell_id"), col("vec_id")).distinct()
       .groupBy("cell_id").agg(count(lit(1)).as("n"))
     val s = sizes.agg(
@@ -414,7 +447,7 @@ object IngestPipeline {
     // recall re-gate: deterministic sample — the lowest-id corpus vectors
     val corpus = spark.read.parquet(paths.embLake).drop("__ver")
     val probe = corpus.orderBy("vec_id").limit(cfg.sampleQueries)
-    val r = Similarity.ivfIndexRecall(spark, paths.ivfIndex, probe, cfg.nProbe, cfg.k)
+    val r = recall(probe)
       .agg(coalesce(sum(col("hits")), lit(0L)), count(lit(1))).head()
     val (hits, nq) = (r.getLong(0), r.getLong(1))
     // denominator clamped to the ACHIEVABLE hits: an index with R residents
@@ -426,12 +459,12 @@ object IngestPipeline {
     val recallOk = hits * 100 >= nq * achievable * cfg.minRecallPct
 
     val tripped = !skewOk || !recallOk
-    // Migration rebuilds the index FROM THE FLOAT LAKE (int8 lists cannot be
-    // re-quantized from themselves), so it is only safe when the lake covers
-    // every resident: an index installed offline over a corpus that never
-    // flowed through this loop's embLake would be REPLACED by a rebuild
-    // containing only the loop-ingested vectors — the "repair" would drop
-    // the original corpus from serving, silently (review finding). Guard on
+    // Migration rebuilds the index FROM THE FLOAT LAKE (quantized lists
+    // cannot be re-quantized from themselves), so it is only safe when the
+    // lake covers every resident: an index installed offline over a corpus
+    // that never flowed through this loop's embLake would be REPLACED by a
+    // rebuild containing only the loop-ingested vectors — the "repair"
+    // would drop the original corpus from serving, silently. Guard on
     // coverage; an uncovered install gets the report (so operators see the
     // trip) and a loud warning instead of data loss.
     val corpusCovers = tripped && {
@@ -440,26 +473,19 @@ object IngestPipeline {
       // rebuild would still drop every resident not in the lake — the
       // anti-join asks the actual question (review finding). Cost is one
       // ids-only join on the (already-computed) distinct resident ids.
-      val uncovered = spark.read.parquet(s"${paths.ivfIndex}/lists")
+      val uncovered = spark.read.parquet(s"$index/lists")
         .select("vec_id").distinct()
         .join(corpus.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
         .count()
       if (uncovered > 0) {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"IVF health tripped but the embedding lake is missing $uncovered of $nVecs " +
+          s"$label health tripped but the embedding lake is missing $uncovered of $nVecs " +
             s"index residents — migration SKIPPED (it would drop the uncovered vectors). " +
             s"Backfill ${paths.embLake} with the install corpus's float vectors to enable repair.")
       }
       uncovered == 0
     }
-    if (corpusCovers) {
-      // the model's true cell count comes from the CELLS table, not from the
-      // non-empty lists partitions: emptied cells would otherwise silently
-      // shrink k on every migration (review finding)
-      val k = cfg.retrainK.getOrElse(
-        Similarity.readIvfCentroids(spark, paths.ivfIndex).length)
-      Similarity.migrateIvfIndex(spark, paths.ivfIndex, corpus, k, cfg.retrainIters)
-    }
+    if (corpusCovers) migrate(corpus)
     Some(IvfHealthReport(nCells, nVecs, maxList, skewOk, hits, nq, recallOk,
       migrated = corpusCovers))
   }
@@ -486,86 +512,23 @@ object IngestPipeline {
       minRecallPct: Int = 50,
       retrainKmIters: Int = 5,
       retrainPqIters: Int = 3,
-      retrainCells: Option[Int] = None)
-
-  /** One PQ health-check outcome — shape-identical to [[IvfHealthReport]]. */
-  final case class PqHealthReport(
-      nCells: Long,
-      nVecs: Long,
-      maxList: Long,
-      skewOk: Boolean,
-      hits: Long,
-      nQueries: Long,
-      recallOk: Boolean,
-      migrated: Boolean)
+      retrainCells: Option[Int] = None) extends HealthThresholds
 
   /** Run the drift monitor over the IVF-PQ serving index and, when it
-    * trips, the [[Pq.migrateIvfPqIndex]] repair. Mirrors [[checkIvfHealth]]
-    * guard-for-guard: readable-index + data-bearing-lake detection, the
-    * achievable-hits recall clamp, and the lake-coverage anti-join that
-    * refuses a migration which would drop residents the lake never saw.
+    * trips, the [[Pq.migrateIvfPqIndex]] repair — the [[checkIvfHealth]]
+    * monitor over the PQ family's readable check, recall and migration.
     */
   def checkIvfPqHealth(
       spark: SparkSession,
       paths: IngestPaths,
-      cfg: PqHealthConfig): Option[PqHealthReport] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.ivfPqIndex), spark.sparkContext.hadoopConfiguration)
-    val hasIndex = Pq.ivfPqIndexReadable(spark, paths.ivfPqIndex)
-    val hasCorpus = {
-      val root = new org.apache.hadoop.fs.Path(paths.embLake)
-      fs.exists(root) && {
-        val it = fs.listFiles(root, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next()
-          found = f.isFile && f.getPath.getName.endsWith(".parquet")
-        }
-        found
-      }
-    }
-    if (!hasIndex || !hasCorpus) return None
-
-    val sizes = spark.read.parquet(s"${paths.ivfPqIndex}/lists")
-      .select(col("cell_id"), col("vec_id")).distinct()
-      .groupBy("cell_id").agg(count(lit(1)).as("n"))
-    val s = sizes.agg(
-      count(lit(1)).as("n_cells"), sum(col("n")).as("n_vecs"),
-      max(col("n")).as("max_list")).head()
-    val (nCells, nVecs, maxList) = (s.getLong(0), s.getLong(1), s.getLong(2))
-    val skewOk = maxList * nCells <= nVecs * cfg.maxSkewRatio
-
-    val corpus = spark.read.parquet(paths.embLake).drop("__ver")
-    val probe = corpus.orderBy("vec_id").limit(cfg.sampleQueries)
-    val r = Pq.ivfPqIndexRecall(spark, paths.ivfPqIndex, probe, cfg.nProbe, cfg.k)
-      .agg(coalesce(sum(col("hits")), lit(0L)), count(lit(1))).head()
-    val (hits, nq) = (r.getLong(0), r.getLong(1))
-    val achievable = math.min(cfg.k.toLong, math.max(nVecs - 1, 0L))
-    val recallOk = hits * 100 >= nq * achievable * cfg.minRecallPct
-
-    val tripped = !skewOk || !recallOk
-    val corpusCovers = tripped && {
-      val uncovered = spark.read.parquet(s"${paths.ivfPqIndex}/lists")
-        .select("vec_id").distinct()
-        .join(corpus.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-        .count()
-      if (uncovered > 0) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"IVF-PQ health tripped but the embedding lake is missing $uncovered of $nVecs " +
-            s"index residents — migration SKIPPED (it would drop the uncovered vectors). " +
-            s"Backfill ${paths.embLake} with the install corpus's float vectors to enable repair.")
-      }
-      uncovered == 0
-    }
-    if (corpusCovers) {
-      val k = cfg.retrainCells.getOrElse(
-        Similarity.readIvfCentroids(spark, paths.ivfPqIndex).length)
-      Pq.migrateIvfPqIndex(spark, paths.ivfPqIndex, corpus,
-        nCells = k, kmIters = cfg.retrainKmIters, pqIters = cfg.retrainPqIters)
-    }
-    Some(PqHealthReport(nCells, nVecs, maxList, skewOk, hits, nq, recallOk,
-      migrated = corpusCovers))
-  }
+      cfg: PqHealthConfig): Option[IvfHealthReport] =
+    checkIndexHealth(spark, paths, paths.ivfPqIndex, "IVF-PQ", cfg,
+      Pq.ivfPqIndexReadable(spark, paths.ivfPqIndex),
+      probe => Pq.ivfPqIndexRecall(spark, paths.ivfPqIndex, probe, cfg.nProbe, cfg.k),
+      corpus => Pq.migrateIvfPqIndex(spark, paths.ivfPqIndex, corpus,
+        nCells = cfg.retrainCells.getOrElse(
+          Similarity.readIvfCentroids(spark, paths.ivfPqIndex).length),
+        kmIters = cfg.retrainKmIters, pqIters = cfg.retrainPqIters))
 
   /** Gopher/C4-shaped acceptance: keep docs whose [[Text.qualityBucket]] is
     * an OK bucket (length bounds pass; terse vs fluent both land).
@@ -613,9 +576,12 @@ object IngestPipeline {
     // compaction crossing the pin"). Loud, driver-side (one directory
     // listing, no job): the caller either pins >= the fold boundary (the
     // loop's own read points) or serves from a SnapshotLake generation.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.docLake), spark.sparkContext.hadoopConfiguration)
-    val vers = fs.listStatus(new org.apache.hadoop.fs.Path(paths.docLake))
+    val lake = new org.apache.hadoop.fs.Path(paths.docLake)
+    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(lake)) throw new IllegalStateException(
+      s"ingest lake at ${paths.docLake} is missing but the manifest records " +
+        s"committed batch $applied — the lake directory was removed outside the loop")
+    val vers = fs.listStatus(lake)
       .map(_.getPath.getName).filter(_.startsWith("__ver="))
       .map(_.stripPrefix("__ver=").toLong)
     if (vers.nonEmpty) require(pin >= vers.min,
@@ -705,9 +671,8 @@ object IngestPipeline {
     * heal lives only on the writer path ([[recordApplied]]).
     */
   def lastApplied(spark: SparkSession, paths: IngestPaths): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.manifest), spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(paths.manifest)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(paths.manifest + "__old")
     def read(path: org.apache.hadoop.fs.Path): Option[Long] =
       try {

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * quantizer version — they live in code, invisible to any data
   * fingerprint — and (b) the embedding CONTENT, not just cardinality, so a
   * regenerated corpus with the same row count but different vectors cannot
-  * be served a stale index.
+  * be served a stale index, even when it is regenerated in place under the
+  * same source dir.
   */
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -17,41 +18,62 @@ class IvfIndexSpec extends SparkSpec {
     (i.toLong, v.toSeq)
   }.toDF("vec_id", "embedding")
 
+  /** A source dir whose embeddings table is `emb(seed)`; rewriting it in
+    * place under the same dir is the regeneration the memoized source
+    * fingerprint must notice. */
+  private def writeCorpus(dir: String, seed: Int): Unit =
+    emb(seed).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+  private def corpusDir(seed: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-src").toString
+    writeCorpus(dir, seed)
+    dir
+  }
+
   test("ivf stamp: hyperparameter flip changes the stamp; content change changes the stamp") {
-    val a = SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 1)
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 1) == a,
+    val dir = corpusDir(0)
+    val a = SparkEntry.ivfIndexStamp(spark, dir, k = 2, iters = 1)
+    assert(SparkEntry.ivfIndexStamp(spark, dir, k = 2, iters = 1) == a,
       "stamp must be deterministic for identical inputs")
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 3, iters = 1) != a, "k must be stamped")
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 2) != a, "iters must be stamped")
-    // same cardinality, same vec_ids, different vector CONTENT — the exact
-    // staleness mode count+sum(vec_id) could not see
-    assert(SparkEntry.ivfIndexStamp(emb(1), "sfX", k = 2, iters = 1) != a,
-      "embedding content must be stamped")
+    assert(SparkEntry.ivfIndexStamp(spark, dir, k = 3, iters = 1) != a, "k must be stamped")
+    assert(SparkEntry.ivfIndexStamp(spark, dir, k = 2, iters = 2) != a, "iters must be stamped")
+    // the corpus regenerated IN PLACE: same dir, same cardinality, same
+    // vec_ids, different vector CONTENT — the exact staleness mode
+    // count+sum(vec_id) could not see, and one the per-JVM source memo
+    // must invalidate on rather than serve the old fingerprint
+    writeCorpus(dir, 1)
+    val b = SparkEntry.ivfIndexStamp(spark, dir, k = 2, iters = 1)
+    assert(b != a, "embedding content must be stamped")
+    assert(b.startsWith(s"$dir|12|"), b)
   }
 
   test("ensureIvfIndex: reused while stamp matches, REBUILT when k flips") {
-    val fixture = java.nio.file.Files.createTempDirectory("graft-ivf-stamp").toString
-    val df = emb(0)
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 2, iters = 1)
-    assert(spark.read.parquet(s"$fixture/cells").count() == 2)
-    def listState(): Set[(String, Long)] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(fixture, "lists"))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(p => (p.toString, java.nio.file.Files.getLastModifiedTime(p).toMillis))
-          .toSet
-      } finally s.close()
+    val dir = corpusDir(0)
+    val fixture = SparkEntry.ensureIvfIndex(spark, dir, k = 2, iters = 1)
+    try {
+      assert(spark.read.parquet(s"$fixture/cells").count() == 2)
+      def listState(): Set[(String, Long)] = {
+        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(fixture, "lists"))
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+            .map(p => (p.toString, java.nio.file.Files.getLastModifiedTime(p).toMillis))
+            .toSet
+        } finally s.close()
+      }
+      val before = listState()
+      // same corpus + same hyperparameters: write-once — no file touched
+      SparkEntry.ensureIvfIndex(spark, dir, k = 2, iters = 1)
+      assert(listState() == before, "matching stamp must not rewrite the index")
+      // hyperparameter change: the stamp mismatches and the index is rebuilt
+      // with the new model — the silent-stale-model trap the stamp closes
+      SparkEntry.ensureIvfIndex(spark, dir, k = 3, iters = 1)
+      assert(spark.read.parquet(s"$fixture/cells").count() == 3,
+        "k flip must rebuild the index under the new model")
+    } finally {
+      val root = new org.apache.hadoop.fs.Path(fixture)
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
     }
-    val before = listState()
-    // same corpus + same hyperparameters: write-once — no file touched
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 2, iters = 1)
-    assert(listState() == before, "matching stamp must not rewrite the index")
-    // hyperparameter change: the stamp mismatches and the index is rebuilt
-    // with the new model — the silent-stale-model trap the stamp closes
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 3, iters = 1)
-    assert(spark.read.parquet(s"$fixture/cells").count() == 3,
-      "k flip must rebuild the index under the new model")
   }
 
   test("ivfIndexReadable: mid-write debris reads as bootstrap, not as an index") {

@@ -329,6 +329,27 @@ class IngestPipelineSpec extends SparkSpec {
     // return empty
     intercept[IllegalStateException](
       IngestPipeline.readCommitted(spark, tmpRoot()))
+    // a lake directory removed under a live manifest fails with one clear
+    // message, not the fold guard's raw listing FileNotFoundException
+    val vanished = tmpRoot()
+    assert(IngestPipeline.ingestBatch(spark, vanished, batch0, 0L) == 2L)
+    val lakeDir = new org.apache.hadoop.fs.Path(vanished.docLake)
+    lakeDir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(lakeDir, true)
+    val gone = intercept[IllegalStateException](IngestPipeline.readCommitted(spark, vanished))
+    assert(gone.getMessage.contains("is missing"), gone.getMessage)
+    // a lake path with a space reaches the fold guard (a raw-URI parse of
+    // the path threw URISyntaxException before the guard could speak)
+    val folded = tmpRoot()
+    ingestThree(folded)
+    IngestPipeline.compactCommitted(spark, folded, 1L)
+    val spaced = IngestPaths(
+      Files.createTempDirectory("graft ingest").resolve("lake root").toString)
+    Files.move(java.nio.file.Paths.get(folded.root), java.nio.file.Paths.get(spaced.root))
+    assert(IngestPipeline.readCommitted(spark, spaced, upToBatch = 1L).count() == 4L)
+    val early = intercept[IllegalArgumentException](
+      IngestPipeline.readCommitted(spark, spaced, upToBatch = 0L))
+    assert(early.getMessage.contains("predates the oldest committed partition"),
+      early.getMessage)
   }
 
   test("compaction crash BEFORE the swap recovers to the compacted state") {
